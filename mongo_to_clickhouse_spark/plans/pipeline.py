@@ -29,6 +29,10 @@ collection (`event_id`↔`_id`, `ts`↔`timestamp`, `props`↔`statement`) and
 
 from __future__ import annotations
 
+import os
+from collections.abc import Callable
+from urllib.parse import unquote, urlparse
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -41,6 +45,7 @@ from mongo_to_clickhouse_spark.functions.scalars import (
     sha256_anonymize,
     timestamp_format,
 )
+from mongo_to_clickhouse_spark.operators.materialize import barrier
 
 # Deterministic fixture rule: every 5th customer has opted out
 # (FIXTURES.md "Opt-out dimension" — derived, not a driver table).
@@ -80,6 +85,47 @@ def optout_active(dim: DataFrame) -> DataFrame:
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
+
+
+def _input_file_stats(df: DataFrame) -> tuple | None:
+    """(uri, mtime_ns, size) of every file ``df`` scans, or None when it
+    scans no file or a file's status cannot be read locally."""
+    stats = []
+    for uri in df.inputFiles():
+        parsed = urlparse(uri)
+        if parsed.scheme not in ("", "file"):
+            return None
+        try:
+            st = os.stat(unquote(parsed.path))
+        except OSError:
+            return None
+        stats.append((uri, st.st_mtime_ns, st.st_size))
+    return tuple(sorted(stats)) or None
+
+
+def held_optout_active(customer: DataFrame) -> Callable[[], DataFrame]:
+    """A holder of ``optout_active(optout_dim(customer))`` for a long-lived
+    consumer such as a stream: each call returns the dimension,
+    materialized once into one partition through ``barrier``, and
+    rebuilt when the (mtime, size) of any file ``customer`` scans has
+    changed since the build: the reference's cached opt-out ``HashSet``
+    and its ``invalidate`` command (reference ``src/main.rs:756-822``),
+    with the file stats as the invalidation signal. A ``customer`` with
+    no readable input files (e.g. built by ``createDataFrame``) gets the
+    dimension derived afresh on every call."""
+    held: tuple[tuple, DataFrame] | None = None
+
+    def active() -> DataFrame:
+        nonlocal held
+        stats = _input_file_stats(customer)
+        if stats is None:
+            return optout_active(optout_dim(customer))
+        if held is None or held[0] != stats:
+            dim = optout_active(optout_dim(customer)).coalesce(1)
+            held = (stats, barrier(dim))
+        return held[1]
+
+    return active
 
 
 def _fanout_undersplit(df: DataFrame) -> DataFrame:

@@ -305,9 +305,12 @@ def stream_multitenant_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def stream_cache_invalidate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Opt-out cache refresh semantics (TCP 'invalidate', src/main.rs
-    :800-822, 1019-1056): unnecessary side channel on Spark — the dim is
-    re-derived inside EVERY foreachBatch. Demonstrated by recording the
-    dim row count observed per micro-batch (2 batches → 2 observations)."""
+    :800-822, 1019-1056) without the side channel: the stream holds the
+    dim from ``held_optout_active``, which re-checks the customer files'
+    (mtime, size) before every micro-batch and rebuilds the dim only when
+    one changed. Demonstrated by recording the dim row count observed per
+    micro-batch (2 batches → 2 observations)."""
+    from mongo_to_clickhouse_spark.plans.pipeline import held_optout_active
     from mongo_to_clickhouse_spark.sinks.writers import dual_write_batch
 
     src, work = stage_events_source(sf_dir, parts=2, prefix="inv")
@@ -318,9 +321,10 @@ def stream_cache_invalidate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mongo_to_clickhouse_spark.streaming.pipeline import streaming_statements
 
     anon = streaming_statements(spark, src, customer)
+    held = held_optout_active(customer)
 
     def _batch(df, batch_id):
-        active = optout_active(optout_dim(customer))  # fresh read, per batch
+        active = held()
         n_dim = active.count()
         spark.createDataFrame([Row(batch_id=batch_id, dim_rows=n_dim)]).write.mode(
             "append"
@@ -940,7 +944,7 @@ STREAM_MULTITENANT_FANOUT_SQL = _fanout_duck_sql()
 
 def _cache_invalidate_duck_sql() -> str:
     # 2 staged files x maxFilesPerTrigger=1 => exactly batches 0 and 1,
-    # each observing the full active-dim count from its fresh re-read
+    # each observing the full active-dim count from the held dim
     from mongo_to_clickhouse_spark.queries.core import ACTIVE_DIM_SQL
 
     return f"""

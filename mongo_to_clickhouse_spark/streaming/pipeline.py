@@ -17,8 +17,9 @@ Reference architecture being re-expressed (SURVEY §3.1):
   → one streaming query per tenant from a shared SparkSession; restart =
   ``start()`` from the same checkpoint
 - opt-out cache + TCP ``invalidate`` (src/main.rs:756-822, 1019-1056)
-  → the dim is re-read per micro-batch inside foreachBatch (cheap,
-  broadcast) — push invalidation is unnecessary by construction.
+  → each stream holds the dim, materialized once, and re-checks the
+  customer source's file stats before every micro-batch, rebuilding the
+  dim only when a file changed — push invalidation is unnecessary.
 
 In production the source would be the Mongo Spark connector's change-stream
 micro-batch source; fixtures use the parquet file source with identical
@@ -34,8 +35,7 @@ from pyspark.sql.streaming import StreamingQuery
 from mongo_to_clickhouse_spark.config import TenantConfig
 from mongo_to_clickhouse_spark.plans.pipeline import (
     anonymized_statements,
-    optout_active,
-    optout_dim,
+    held_optout_active,
     statements_from_events,
 )
 from mongo_to_clickhouse_spark.sinks.writers import dual_write_batch
@@ -142,11 +142,13 @@ def run_tenant_stream(
         spark, tenant.source_path, customer, max_files_per_trigger
     )
 
+    active = held_optout_active(customer)
+
     def _batch(df: DataFrame, batch_id: int) -> None:
-        # Re-derive the opt-out dim per micro-batch: this is the reference's
+        # The opt-out dim is held across micro-batches and rebuilt only
+        # when the customer source's files changed: the reference's
         # cache-invalidation semantics without the TCP side channel.
-        active = optout_active(optout_dim(customer))
-        dual_write_batch(df, batch_id, tenant, active, fail_injector)
+        dual_write_batch(df, batch_id, tenant, active(), fail_injector)
 
     writer = (
         anon.writeStream.foreachBatch(_batch)

@@ -81,3 +81,16 @@ def test_gated_results_identical(spark, forced_gate):
     finally:
         cfg_mod.TUNING = saved
         clear_barrier_view_cache()
+
+
+def test_copart_parts_rounds_up(monkeypatch):
+    from mongo_to_clickhouse_spark.queries.graphops import _copart_parts
+
+    monkeypatch.setattr(
+        cfg, "TUNING",
+        dataclasses.replace(cfg.TUNING, graph_copart_rows_per_part=500_000),
+    )
+    assert _copart_parts(2_900_000) == 6   # 5 parts would hold 580k each
+    assert _copart_parts(3_000_000) == 6
+    assert _copart_parts(3_000_001) == 7
+    assert _copart_parts(1) == 2

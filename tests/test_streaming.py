@@ -385,3 +385,147 @@ def test_dlq_mass_replay_job_count_is_independent_of_batch_count(spark, tmp_path
         f"replay job count grew with batch count ({j_small} -> {j_large}):"
         " the unioned-write path regressed to per-batch jobs"
     )
+
+
+def _rename_customers(path: str) -> None:
+    """Rewrite the customer parquet at ``path`` in place with every
+    ``c_name`` changed."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    table = pq.read_table(path)
+    names = pc.binary_join_element_wise(
+        "Renamed#", pc.cast(table["c_name"], pa.string()), ""
+    )
+    table = table.set_column(
+        table.schema.get_field_index("c_name"), "c_name", names
+    )
+    pq.write_table(table, path)
+
+
+_ROW_COLS = ["id", "statement", "timestamp", "hashed_value"]
+
+
+def _routed(spark, events_path: str, customer):
+    """(main, opt-out) rows of ``route_split`` for one staged events file,
+    as sets of (id, statement, timestamp, hashed_value)."""
+    from mongo_to_clickhouse_spark.plans.pipeline import route_split
+    from mongo_to_clickhouse_spark.streaming.pipeline import EVENTS_SCHEMA
+
+    events = spark.read.schema(EVENTS_SCHEMA).parquet(events_path)
+    anon = anonymized_statements(statements_from_events(events, customer))
+    return tuple(
+        {tuple(r) for r in part.select(*_ROW_COLS).collect()}
+        for part in route_split(anon, optout_active(optout_dim(customer)))
+    )
+
+
+def _sink_rows(spark, path: str, batch_id: int | None = None) -> set:
+    df = spark.read.parquet(path)
+    if batch_id is not None:
+        df = df.filter(F.col("batch_id") == batch_id)
+    return {tuple(r) for r in df.select(*_ROW_COLS).collect()}
+
+
+def test_live_stream_sees_customer_rewrite(spark, tmp_path):
+    """The opt-out dim a live stream holds is rebuilt when the customer
+    file is rewritten in place: after every ``c_name`` changes between
+    two micro-batches, batch 1's opt-out sink equals ``route_split``
+    against the rewritten table (a dim that is never rebuilt would route
+    none of its rows to the opt-out sink)."""
+    import dataclasses
+    import shutil
+    import time
+
+    dim_dir = tmp_path / "dim"
+    dim_dir.mkdir()
+    cust_path = str(dim_dir / "customer.parquet")
+    shutil.copy(os.path.join(SRC, "customer.parquet"), cust_path)
+    customer = load_table(spark, str(dim_dir), "customer")
+
+    t = dataclasses.replace(_tenant(tmp_path, name="fresh"), flush_seconds=1)
+    os.makedirs(t.source_path)
+    halves = _stage_events(str(tmp_path / "staging"), parts=2)
+
+    def land_and_wait(k: int) -> None:
+        os.rename(halves[k], os.path.join(t.source_path, f"part{k}.parquet"))
+        marker = os.path.join(t.sink_optout_path, f"batch_id={k}", "_SUCCESS")
+        deadline = time.time() + 120
+        while not os.path.exists(marker) and time.time() < deadline:
+            assert q.exception() is None, q.exception()
+            time.sleep(0.1)
+        assert os.path.exists(marker), f"batch {k} never committed"
+
+    q = run_tenant_stream(spark, t, customer, available_now=False)
+    try:
+        land_and_wait(0)
+        _rename_customers(cust_path)
+        land_and_wait(1)
+    finally:
+        q.stop()
+
+    renamed = load_table(spark, str(dim_dir), "customer")
+    assert renamed.filter(F.col("c_name").startswith("Renamed#")).count() == 150
+    main, optout = _routed(
+        spark, os.path.join(t.source_path, "part1.parquet"), renamed
+    )
+    assert optout
+    assert _sink_rows(spark, t.sink_optout_path, 1) == optout
+    assert _sink_rows(spark, t.sink_main_path, 1) == main
+
+
+def test_stream_customer_without_input_files_routes_identically(
+    spark, tmp_path
+):
+    """A ``customer`` built by ``createDataFrame`` scans no file, so the
+    stream derives the opt-out dim per micro-batch; its sinks must equal
+    those of the file-backed stream."""
+    customer = load_table(spark, SRC, "customer")
+    local = spark.createDataFrame(customer.collect(), customer.schema)
+    assert local.inputFiles() == []
+    sinks = {}
+    for name, cust in (("file", customer), ("local", local)):
+        t = _tenant(tmp_path, name=name)
+        _stage_events(t.source_path, parts=2)
+        q = run_tenant_stream(spark, t, cust, available_now=True)
+        q.awaitTermination(120)
+        assert q.exception() is None
+        sinks[name] = (_sink_rows(spark, t.sink_main_path),
+                       _sink_rows(spark, t.sink_optout_path))
+    assert sinks["local"][1]
+    assert sinks["local"] == sinks["file"]
+
+
+def test_stream_builds_optout_dim_once(spark, tmp_path):
+    """Per-batch work: the opt-out dim is materialized once, in the first
+    micro-batch (its window dedup is the stream's only shuffle), and
+    later micro-batches run no shuffle stage at all."""
+    t = _tenant(tmp_path, name="pin")
+    _stage_events(t.source_path, parts=4)
+    customer = load_table(spark, SRC, "customer")
+    q = run_tenant_stream(
+        spark, t, customer, available_now=True, max_files_per_trigger=1
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    # micro-batch jobs run in the query's job group; the job description
+    # ends with the batch id ("... batch = N")
+    writes, reads = [], []  # (batch id, stage id) of shuffling stages
+    for job_id in sc.statusTracker().getJobIdsForGroup(str(q.runId)):
+        job = store.job(job_id)
+        batch = int(job.description().get().rsplit("batch = ", 1)[1])
+        stage_ids = job.stageIds()
+        for i in range(stage_ids.size()):
+            st = store.lastStageAttempt(stage_ids.apply(i))
+            if str(st.status()) == "SKIPPED":
+                continue
+            if st.shuffleWriteBytes():
+                writes.append((batch, st.stageId()))
+            if st.shuffleReadBytes():
+                reads.append((batch, st.stageId()))
+    assert [p.batchId for p in q.recentProgress] == [0, 1, 2, 3]
+    assert len(writes) == 1, writes
+    assert reads and {b for b, _ in writes + reads} == {0}, (writes, reads)
